@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.cdc.StreamingReconstruction
 import graft.model.{ChangeEvent, TxnEvent}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming soak at realistic state volume (round-12 verdict
@@ -39,13 +39,10 @@ object StreamSoak {
     val perTxn = if (args.length > 1) args(1).toInt else 2
     val chunks = if (args.length > 2) args(2).toInt else 20
     val out = if (args.length > 3) args(3) else "target/stream_soak.tsv"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // The production session, with the default (HDFS-backed) state store
+    // whose footprint the soak reports.
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -49,19 +49,18 @@ class FilePipelineIntegrationSpec extends SparkSpec {
     ()
   }
 
-  test("file-replayed Kafka composition: parse, split, reconstruct end to end") {
-    val root = Files.createTempDirectory("graft-filepipe")
-    val changeDir = Files.createDirectories(root.resolve("topic-change"))
-    val txnDir = Files.createDirectories(root.resolve("topic-txn"))
-    val outDir = root.resolve("out").toString
-    val ckptDir = root.resolve("ckpt").toString
-
+  /** The reference composition over two topic paths; each call of the
+    * returned function runs it as one bounded micro-batch, a fresh query
+    * over the same checkpoint — a checkpointed restart per wave.
+    */
+  private def pipeline(changePath: String, txnPath: String, outDir: String,
+      ckptDir: String): () => Unit = {
     // The referencePipelineSources contract: one raw DataFrame per
     // topic with a single `value` string column.
     val changeRaw = spark.readStream.format("text")
-      .load(changeDir.toString).toDF("value")
+      .load(changePath).toDF("value")
     val txnRaw = spark.readStream.format("text")
-      .load(txnDir.toString).toDF("value")
+      .load(txnPath).toDF("value")
 
     // Identical downstream wiring to ReferencePipeline.main
     val (changes, _, _) = DebeziumParser.split(DebeziumParser.parse(changeRaw))
@@ -71,17 +70,22 @@ class FilePipelineIntegrationSpec extends SparkSpec {
       countGated = false,
       ttl = Some(java.time.Duration.ofHours(1)))
 
-    // One bounded micro-batch per arrival wave, fresh query each time
-    // over the same checkpoint — a checkpointed restart per wave.
-    def runOnce(): Unit = {
-      val q = records.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckptDir)
-        .outputMode("append")
-        .trigger(Trigger.Once())
-        .start()
-      q.awaitTermination()
-    }
+    () => records.writeStream.format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", ckptDir)
+      .outputMode("append")
+      .trigger(Trigger.Once())
+      .start()
+      .awaitTermination()
+  }
+
+  test("file-replayed Kafka composition: parse, split, reconstruct end to end") {
+    val root = Files.createTempDirectory("graft-filepipe")
+    val changeDir = Files.createDirectories(root.resolve("topic-change"))
+    val txnDir = Files.createDirectories(root.resolve("topic-txn"))
+    val outDir = root.resolve("out").toString
+    val ckptDir = root.resolve("ckpt").toString
+    val runOnce = pipeline(changeDir.toString, txnDir.toString, outDir, ckptDir)
 
     // Wave 1: t1 events out of order + BEGIN; one malformed row (dead
     // letter path of the split — must not break the pipeline).
@@ -109,6 +113,42 @@ class FilePipelineIntegrationSpec extends SparkSpec {
     assert(recs(1).events.map(_.operation) == Seq("c"))
   }
 
+  test("a checkpoint written by Spark's default manager resumes exactly once") {
+    // Checkpoints that exist before GraftSession.CheckpointFileManager
+    // was set carry Hadoop's `.crc` sidecars; the next run reads them
+    // (checksummed) and goes on writing beside them.
+    val root = Files.createTempDirectory("graft-filepipe-resume")
+    val changeDir = Files.createDirectories(root.resolve("topic-change"))
+    val txnDir = Files.createDirectories(root.resolve("topic-txn"))
+    val outDir = root.resolve("out").toString
+    val ckpt = root.resolve("ckpt")
+    val runOnce = pipeline(changeDir.toString, txnDir.toString, outDir,
+      ckpt.toString)
+
+    val (key, cls) = graft.GraftSession.CheckpointFileManager
+    // Wave 1 under Spark's default manager: t0 completes, t1 opens.
+    writeTopicFile(changeDir, Seq(change("t0", 1), change("t1", 10)))
+    writeTopicFile(txnDir, Seq(marker("t0", "END", 1), marker("t1", "BEGIN")))
+    spark.conf.unset(key)
+    try runOnce() finally spark.conf.set(key, cls)
+    assert(Files.exists(ckpt.resolve("offsets").resolve(".0.crc")))
+    assert(spark.read.parquet(outDir).count() == 1)
+
+    // Wave 2 under the session's manager, over the same checkpoint: t1's
+    // state and both sources' offsets resume, t0 is not emitted again.
+    writeTopicFile(changeDir, Seq(change("t1", 20), change("t2", 5, "c")))
+    writeTopicFile(txnDir, Seq(marker("t1", "END", 2), marker("t2", "END", 1)))
+    runOnce()
+    assert(Files.exists(ckpt.resolve("offsets").resolve("1")))
+    assert(!Files.exists(ckpt.resolve("offsets").resolve(".1.crc")))
+
+    val recs = spark.read.parquet(outDir).as[TransactionRecord]
+      .collect().sortBy(_.transactionId)
+    assert(recs.map(_.transactionId).toSeq == Seq("t0", "t1", "t2"))
+    assert(recs(1).events.map(_.tsMs) == Seq(10, 20))
+    assert(recs(1).eventCount.contains(2L))
+  }
+
   test("pattern subscription routing: one glob source captures both change topics") {
     // The reference's second pipeline subscribes the change side by
     // PATTERN (`mysql-server.db_1.*`,
@@ -125,28 +165,8 @@ class FilePipelineIntegrationSpec extends SparkSpec {
     val txnDir = Files.createDirectories(root.resolve("mysql-server.transaction"))
     val outDir = root.resolve("out").toString
     val ckptDir = root.resolve("ckpt").toString
-
-    val changeRaw = spark.readStream.format("text")
-      .load(root.resolve("mysql-server.db_1.*").toString).toDF("value")
-    val txnRaw = spark.readStream.format("text")
-      .load(txnDir.toString).toDF("value")
-
-    val (changes, _, _) = DebeziumParser.split(DebeziumParser.parse(changeRaw))
-    val (_, txns, _) = DebeziumParser.split(DebeziumParser.parse(txnRaw))
-    val records = StreamingReconstruction.reconstruct(
-      changes, txns,
-      countGated = false,
-      ttl = Some(java.time.Duration.ofHours(1)))
-
-    def runOnce(): Unit = {
-      val q = records.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckptDir)
-        .outputMode("append")
-        .trigger(Trigger.Once())
-        .start()
-      q.awaitTermination()
-    }
+    val runOnce = pipeline(root.resolve("mysql-server.db_1.*").toString,
+      txnDir.toString, outDir, ckptDir)
 
     // One transaction spanning BOTH captured tables (a multi-table
     // write is exactly what the pattern subscription exists for), one
