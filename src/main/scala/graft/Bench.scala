@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // On-disk index tier (graft.IndexTier): the one-time index builds
     // (verified near-dup pair table, NSW graph) are written to parquet
     // by the first session that needs them and SCANNED by every later
@@ -33,8 +33,8 @@ object Bench {
     // At sf0.1 (220 MB) this IS cpus; at sf10 (2.0 GB) it's ~64; at
     // 100 TB it's ~3M — the policy, not the constant, is the point.
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus) match {
-        case "bytes" =>
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") match {
+        case Some("bytes") =>
           def du(f: java.io.File): Long =
             if (f.isDirectory)
               Option(f.listFiles()).getOrElse(Array.empty).map(du).sum
@@ -42,26 +42,12 @@ object Bench {
           val bytes = du(new java.io.File(sfDir))
           val target = 128L << 20
           val expansion = 4L
-          math.max(cpus.toInt,
-            ((bytes * expansion + target - 1) / target).toInt).toString
-        case v => v
+          math.max(cpus,
+            ((bytes * expansion + target - 1) / target).toInt)
+        case Some(v) => v.toInt
+        case None => cpus
       }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // Whole-stage-codegen class cache (STATIC conf): the default
-      // 100 entries thrash under a 252-query suite (~1000+ distinct
-      // codegen units), recompiling nearly every stage every pass.
-      // Measured at sf0.1 (same tree, same 1-cold+2-warm schedule):
-      // warm suite 101.5 s → 61.3 s. Builder config is a no-op when
-      // the launcher already set the system property (sbt runs do).
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      // Reclaim unreferenced localCheckpoint blocks promptly — see
-      // GraftSession (sf10: checkpoint pile-up inflated co-running
-      // queries 3-6× vs isolated runs before this).
-      .config("spark.cleaner.periodicGC.interval", "60s")
+    val spark = GraftSession.builder(shufflePartitions = shufflePartitions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: session init, parquet reader, codegen framework,
@@ -245,9 +231,8 @@ object Bench {
       else s"lowermid$n"
     val coldRun = if (coldPasses >= 2) 2 else 1
     // The sidecar must stay valid JSON whatever the env injects
-    // (ADVICE r12: a quote in sfDir or a non-numeric partitions value
-    // used to produce unparseable output): strings are escaped, and
-    // numeric-looking fields fall back to escaped strings.
+    // (ADVICE r12: a quote in sfDir used to produce unparseable
+    // output): strings are escaped; the counts are parsed Ints.
     def jstr(s: String): String =
       "\"" + s.flatMap {
         case '"' => "\\\""
@@ -255,12 +240,10 @@ object Bench {
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c => c.toString
       } + "\""
-    def jnum(s: String): String =
-      if (s.matches("-?\\d+")) s else jstr(s)
     try {
       val w = new java.io.PrintWriter(new java.io.File("target/bench_meta.json"))
       try w.println(
-        s"""{"cold_passes":$coldRun,"cold_stat":"${stat(coldRun)}","warm_passes":${warmPasses.size},"warm_stat":"${stat(warmPasses.size)}","warm_order":"${if (warmPasses.size > 1) "rotated" else "fixed"}","shuffle_partitions":${jnum(shufflePartitions)},"cpus":${jnum(cpus)},"sf":${jstr(sfDir)}}""")
+        s"""{"cold_passes":$coldRun,"cold_stat":"${stat(coldRun)}","warm_passes":${warmPasses.size},"warm_stat":"${stat(warmPasses.size)}","warm_order":"${if (warmPasses.size > 1) "rotated" else "fixed"}","shuffle_partitions":$shufflePartitions,"cpus":$cpus,"sf":${jstr(sfDir)}}""")
       finally w.close()
     } catch { case _: Throwable => () }
     // The stdout errs list is CAPPED (a mass failure would push the

@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Spark-native deployment surface for the engine's custom expressions.
   *
   * `--conf spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`) makes
+  * `withExtensions(new GraftExtensions)`, as `GraftSession.builder`
+  * does) makes
   * every custom codegen expression available to plain SQL —
   * `SELECT poly_hash(text) FROM docs` — with no per-session `register`
   * call. The per-session `register` helpers on each function object

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the scale-oriented defaults documented for the
-  * 100 TB design point.
+/** The one session factory — every main and the test sessions build
+  * here — with the scale-oriented defaults documented for the 100 TB
+  * design point.
   *
   * Local testing runs `local[N]`; on a real cluster the same configs
   * apply with `shufflePartitions` sized to ~2-3× total cores (or left
@@ -29,8 +30,15 @@ object GraftSession {
     graft.streaming.LocalCheckpointFileManager.ConfKey ->
       classOf[graft.streaming.LocalCheckpointFileManager].getName
 
-  def builder(master: String = "local[32]",
-      shufflePartitions: Int = 32,
+  /** Local cores for the default master and shuffle width:
+    * `SPARK_GRAFT_CPUS` if set, else every core the JVM sees. The one
+    * place any tool reads it.
+    */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def builder(master: String = s"local[$cpus]",
+      shufflePartitions: Int = cpus,
       rocksDbState: Boolean = false): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)
@@ -67,14 +75,5 @@ object GraftSession {
       b.config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     else b
-  }
-
-  def get(): SparkSession = {
-    val spark = builder().getOrCreate()
-    // O5: route streaming-query lifecycle (incl. failures with their
-    // exceptions) to the log — the reference's uncaught-exception
-    // handler contract, in engine-native listener form.
-    graft.streaming.QueryEvents.register(spark)
-    spark
   }
 }

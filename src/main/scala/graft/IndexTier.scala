@@ -78,8 +78,8 @@ object IndexTier {
 
   // Fingerprinting lists the corpus dir on every cached() call site's
   // first touch; memoize per raw dir string for the session. A corpus
-  // rewritten in place mid-session must go through the module
-  // invalidate(dir) contract anyway, which clears this too.
+  // rewritten in place mid-session must go through
+  // SessionMemo.invalidate(dir) anyway, which clears this too.
   private val fpMemo =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -164,14 +164,14 @@ object IndexTier {
     f.delete(); ()
   }
 
-  /** Delete the on-disk indexes for `d` — the disk half of the
-    * corpus-memo `invalidate(dir)` contract (corpus rewritten in
-    * place ⇒ every derived materialization is stale). With a
-    * `prefix`, only that module's index names are removed — a
-    * partial invalidate must not delete parquet that OTHER modules'
-    * live in-memory memos still scan.
+  /** Delete the on-disk indexes for `d` whose names start with
+    * `prefix`. The empty prefix is the disk half of
+    * [[SessionMemo.invalidate]] (corpus rewritten in place ⇒ every
+    * derived materialization is stale); a partial reset
+    * ([[graft.llm.Dedup.invalidateCanonical]]) names its own prefix,
+    * so it never deletes parquet other live memos still scan.
     */
-  def invalidate(d: String, prefix: String = ""): Unit = {
+  def invalidate(d: String, prefix: String): Unit = {
     rootDir.foreach { root =>
       val tree = new java.io.File(s"$root/${corpusKey(d)}")
       if (prefix.isEmpty) rmTree(tree)

@@ -95,8 +95,7 @@ object SessionMemo {
     }
   }
 
-  /** Drop every live session's entries matching `pred` — the
-    * corpus-rewritten-in-place `invalidate(dir)` contract. Iterates
+  /** Drop every live session's entries matching `pred`. Iterates
     * only sessions still alive (dead ones have nothing to serve).
     */
   def invalidateIf(pred: Key => Boolean): Unit = holders.synchronized {
@@ -106,11 +105,15 @@ object SessionMemo {
     }
   }
 
-  /** Drop entries for memo `name` at corpus `dir` in all live
-    * sessions.
+  /** The one reset for a corpus rewritten in place: drop every live
+    * session's entries keyed on `dir` and the whole on-disk index
+    * tree for `dir` ([[IndexTier.invalidate]]), so no derived
+    * materialization of the old corpus is served again.
     */
-  def invalidate(name: String, dir: String): Unit =
-    invalidateIf(k => k.name == name && k.dir == dir)
+  def invalidate(dir: String): Unit = {
+    invalidateIf(_.dir == dir)
+    IndexTier.invalidate(dir, prefix = "")
+  }
 
   /** Number of live sessions currently holding at least one entry —
     * observability for the collectability spec.

@@ -25,11 +25,13 @@ object ReferencePipeline {
 
   def main(args: Array[String]): Unit = {
     val bootstrap = args.headOption.getOrElse("kafka:9092")
-    val spark = GraftSession.builder(
-      master = sys.env.getOrElse("SPARK_MASTER", "local[4]"),
-      shufflePartitions =
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
-      rocksDbState = true).getOrCreate()
+    val b = GraftSession.builder(rocksDbState = true)
+    sys.env.get("SPARK_MASTER").foreach(b.master)
+    val spark = b.getOrCreate()
+    // O5: streaming-query lifecycle, failures with their exceptions
+    // included, goes to the log — the reference's uncaught-exception
+    // handler contract, in engine-native listener form.
+    graft.streaming.QueryEvents.register(spark)
 
     val (changeRaw, txnRaw) =
       KafkaSource.referencePipelineSources(spark, bootstrap)

@@ -680,7 +680,7 @@ object Dedup {
     * discipline of [[ccMemo]]. At 100 TB these are maintained tables a
     * curation run writes once and every dedup job scans. Eager
     * localCheckpoint, NOT persist: checkpoint blocks are reclaimed by
-    * the ContextCleaner once unreferenced (see [[invalidate]]) — a
+    * the ContextCleaner once unreferenced (see [[graft.SessionMemo.invalidate]]) — a
     * lazy persist entry would live in the SQL cache for the session.
     */
 
@@ -1194,12 +1194,6 @@ object Dedup {
         sharedShingleSets(s, d).select(col("doc_id")),
         verifiedPairsShared(s, d, JACCARD_T)))
 
-  /** Drop every memoized frame for `dir` (all sessions) — call when
-    * the corpus at `dir` is rewritten in place, otherwise the memos
-    * would keep serving the stale materializations. The dropped
-    * localCheckpoint blocks are reclaimed by the ContextCleaner once
-    * the frames are unreferenced.
-    */
   /** Drop ONLY the canonical-map materializations (the fixpoint /
     * star-contraction RESULTS), keeping the per-document derivations
     * (shingle sets, signatures, verified pairs) they are built from.
@@ -1211,16 +1205,9 @@ object Dedup {
     * ~15 min per query with full invalidation, ~1–2 with this).
     */
   def invalidateCanonical(dir: String): Unit = {
-    graft.SessionMemo.invalidate("dedup_cc", dir)
-    graft.SessionMemo.invalidate("dedup_cc_star", dir)
-    graft.IndexTier.invalidate(dir, "dedup_cc_star")
-  }
-
-  def invalidate(dir: String): Unit = {
     graft.SessionMemo.invalidateIf(k =>
-      k.name.startsWith("dedup_") && k.dir == dir)
-    graft.IndexTier.invalidate(dir, "dedup_")
-    ()
+      (k.name == "dedup_cc" || k.name == "dedup_cc_star") && k.dir == dir)
+    graft.IndexTier.invalidate(dir, "dedup_cc_star")
   }
 
   private def qDedupCc(s: SparkSession, d: String): DataFrame =
@@ -1242,7 +1229,7 @@ object Dedup {
     * index-build job, warm reads scan the label frame. The memo
     * value is eagerly checkpointed so reuse replays a component-sized
     * scan, not the ids-join tail of the build plan; dropped by
-    * [[invalidate]] with the other corpus memos.
+    * [[graft.SessionMemo.invalidate]] with the other corpus memos.
     */
 
   private def qCcStar(s: SparkSession, d: String): DataFrame =

@@ -462,12 +462,6 @@ object Embeddings {
         .transform(graft.Memo.checkpoint) // feeds every power iteration
     }
 
-  /** Drop the memoized Gram matrix for `dir` (the
-    * [[graft.ops.Graph.invalidate]] contract).
-    */
-  def invalidate(dir: String): Unit =
-    graft.SessionMemo.invalidate("emb_pca_cov", dir)
-
   /** [[PCA_ITERS]] integer power-iteration rounds; returns the final
     * (vector frame, L∞ normalizer frame).
     */

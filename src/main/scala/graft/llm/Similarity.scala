@@ -1322,14 +1322,6 @@ object Similarity {
     * not inside every timed search.
     */
 
-  /** Drop the memoized NSW graph for `dir` (the
-    * [[graft.ops.Graph.invalidate]] contract).
-    */
-  def invalidate(dir: String): Unit = {
-    graft.SessionMemo.invalidate("nsw_emb_graph", dir)
-    graft.IndexTier.invalidate(dir, "nsw_")
-  }
-
   private def nswEmbAndGraph(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
     graft.SessionMemo.getOrElseUpdate(s, "nsw_emb_graph", d) {

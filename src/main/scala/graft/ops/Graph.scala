@@ -75,17 +75,6 @@ object Graph {
           .select(col("o_custkey").as("c"), col("l_suppkey").as("p"))
           .distinct()))
 
-  /** Drop the memoized edge lists for `dir` (all sessions) — call when
-    * the corpus at `dir` is rewritten in place, otherwise the memo
-    * would keep serving the stale materialization (same contract as
-    * [[graft.llm.Dedup.invalidate]]).
-    */
-  def invalidate(dir: String): Unit = {
-    graft.SessionMemo.invalidate("graph_topedges", dir)
-    graft.SessionMemo.invalidate("graph_bipartite", dir)
-    graft.IndexTier.invalidate(dir, "graph_")
-  }
-
   private def buildTopEdges(s: SparkSession, d: String): DataFrame = {
     val co = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_suppkey")).distinct()

@@ -831,12 +831,6 @@ object RelationalQueries {
     * once, not with a fresh scan per query run.
     */
 
-  /** Drop corpus-keyed memos for `dir` (test isolation — mirrors
-    * [[graft.llm.Dedup.invalidate]]).
-    */
-  def invalidate(dir: String): Unit =
-    graft.SessionMemo.invalidate("rq_bloom_build_keys", dir)
-
   private def qBloomMembership(s: SparkSession, d: String): DataFrame = {
     graft.functions.BloomFns.register(s)
     Tables.registerViews(s, d)

@@ -65,14 +65,6 @@ object Tpch {
   private[graft] def psBuildForSpec(s: SparkSession, d: String): DataFrame =
     psBuild(s, d)
 
-  /** Drop the memoized partsupp surrogate for `dir` (all sessions) —
-    * corpus-rewritten-in-place contract, same as [[Graph.invalidate]].
-    */
-  def invalidate(dir: String): Unit = {
-    graft.SessionMemo.invalidate("tpch_ps", dir)
-    graft.IndexTier.invalidate(dir, "tpch_")
-  }
-
   private def revenue = Det.dsumExact(
     Det.money2(col("l_extendedprice")) * Det.factor2(lit(1) - col("l_discount")))
 

@@ -82,16 +82,17 @@ object QueryEvents {
     private[streaming] val MAX_EVENTS = 1024
   }
 
-  private val registered =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, QueryEventLog]()
-
   /** Register (idempotently, one per session) the lifecycle listener
     * and return it — the handle tests and dashboards read events from.
+    * The handle lives in [[graft.SessionMemo]], so registering never
+    * pins the session past its own lifetime; the lock keeps racing
+    * callers from adding a second listener.
     */
-  def register(spark: SparkSession): QueryEventLog =
-    registered.computeIfAbsent(spark, s => {
+  def register(spark: SparkSession): QueryEventLog = synchronized {
+    graft.SessionMemo.getOrElseUpdate(spark, "query_events", "") {
       val l = new QueryEventLog
-      s.streams.addListener(l)
+      spark.streams.addListener(l)
       l
-    })
+    }
+  }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the executed plan (and optionally run) registered
   * queries — the `.explain("formatted")` feedback loop as a main.
   *
@@ -19,13 +17,7 @@ object ExplainQ {
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val doRun = args.contains("run")
     val formatted = args.contains("formatted")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val doJobs = args.contains("jobs")
     val reps = args.collectFirst {

@@ -53,15 +53,6 @@ object FixpointGolden {
     "q_dedup_cap", "q_dedup_cc", "q_dedup_delta", "q_dedup_fuzzy",
     "q_dedup_hops", "q_golden_record", "q_hits", "q_kcore")
 
-  def invalidateAll(dir: String): Unit = {
-    graft.llm.Dedup.invalidate(dir)
-    graft.llm.Embeddings.invalidate(dir)
-    graft.llm.Similarity.invalidate(dir)
-    graft.ops.Graph.invalidate(dir)
-    graft.ops.RelationalQueries.invalidate(dir)
-    graft.ops.Tpch.invalidate(dir)
-  }
-
   /** One golden line's value for `name` run against `dir` in the
     * given session: probe events formatted `label:iters:exch`, in
     * completion order, or `-` for none. Shared with the spec.
@@ -71,7 +62,8 @@ object FixpointGolden {
     * verified pairs) are loop INPUTS and always reach the loop as
     * checkpointed scans, so sharing them across probed queries
     * changes no recorded value, only the wall clock (callers run
-    * [[invalidateAll]] once up front for a clean slate).
+    * [[graft.SessionMemo.invalidate]] once up front for a clean
+    * slate).
     */
   def probeLine(s: SparkSession, dir: String, name: String): String = {
     graft.llm.Dedup.invalidateCanonical(dir)
@@ -89,22 +81,16 @@ object FixpointGolden {
     val subset = args.drop(2).toSet
     val queries =
       if (subset.isEmpty) Queries else Queries.filter(subset.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // The index tier must be OFF: a cached on-disk index would skip
     // the loop entirely (qCcStar's contraction is behind
     // IndexTier.cached) and record nothing.
     System.setProperty("graft.index.dir", "")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.GraftSession.builder()
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "60s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.LoopProbe.enable()
-    invalidateAll(sfDir)
+    graft.SessionMemo.invalidate(sfDir)
     val lines = queries.map { name =>
       val t0 = System.nanoTime()
       val v = probeLine(spark, sfDir, name)

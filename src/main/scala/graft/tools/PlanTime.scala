@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Times PLAN CONSTRUCTION (not execution) per registered query at a
   * corpus dir, under the same plan-only memo mode
   * [[graft.plans.ExchangeGoldenSpec]] uses. Most queries plan in
@@ -24,13 +22,9 @@ object PlanTime {
     val reps = args.collectFirst {
       case a if a.startsWith("reps=") => a.stripPrefix("reps=").toInt
     }.getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
+    val b = graft.GraftSession.builder()
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
     // A/B planner knobs without rebuilding: conf:key=value args.
     args.filter(_.startsWith("conf:")).foreach { a =>
       val kv = a.stripPrefix("conf:").split("=", 2)
@@ -39,12 +33,7 @@ object PlanTime {
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     System.setProperty("graft.plan.only", "1")
-    graft.llm.Dedup.invalidate(sfDir)
-    graft.llm.Embeddings.invalidate(sfDir)
-    graft.llm.Similarity.invalidate(sfDir)
-    graft.ops.Graph.invalidate(sfDir)
-    graft.ops.RelationalQueries.invalidate(sfDir)
-    graft.ops.Tpch.invalidate(sfDir)
+    graft.SessionMemo.invalidate(sfDir)
     val times = graft.SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         val t = (1 to reps).map { _ =>

@@ -39,10 +39,9 @@ object StreamSoak {
     val perTxn = if (args.length > 1) args(1).toInt else 2
     val chunks = if (args.length > 2) args(2).toInt else 20
     val out = if (args.length > 3) args(3) else "target/stream_soak.tsv"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // The production session, with the default (HDFS-backed) state store
     // whose footprint the soak reports.
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -41,6 +41,8 @@ class SessionMemoSpec extends SparkSpec {
       // remains is exactly the memo's own lifetime, which is what
       // this test pins.
       s.conf.set("spark.sql.adaptive.enabled", "false")
+      // The O5 lifecycle listener keeps its handle in the memo too.
+      graft.streaming.QueryEvents.register(s)
       // Plan-only construction is enough to populate the memos.
       System.setProperty("graft.plan.only", "1")
       try {
@@ -61,20 +63,25 @@ class SessionMemoSpec extends SparkSpec {
   }
 
   test("memo entries survive while the session is alive and invalidate by dir") {
-    val s = spark.newSession()
+    val sessions = Seq(spark.newSession(), spark.newSession())
     val built = new java.util.concurrent.atomic.AtomicInteger(0)
-    def get(): String =
-      SessionMemo.getOrElseUpdate(s, "spec_probe", "/spec/dir") {
+    def get(s: org.apache.spark.sql.SparkSession, dir: String): String =
+      SessionMemo.getOrElseUpdate(s, "spec_probe", dir) {
         built.incrementAndGet(); "value"
       }
-    assert(get() == "value")
-    assert(get() == "value")
-    assert(built.get() == 1, "second lookup must hit the memo")
-    SessionMemo.invalidate("spec_probe", "/other/dir")
-    get()
-    assert(built.get() == 1, "invalidate of another dir must not evict")
-    SessionMemo.invalidate("spec_probe", "/spec/dir")
-    get()
-    assert(built.get() == 2, "invalidate of the entry's dir must evict")
+    def getAll(): Unit = sessions.foreach { s =>
+      assert(get(s, "/spec/dir") == "value")
+      assert(get(s, "/other/dir") == "value")
+    }
+    getAll()
+    assert(built.get() == 4, "one build per (session, dir)")
+    getAll()
+    assert(built.get() == 4, "second lookup must hit the memo")
+    SessionMemo.invalidate("/spec/dir")
+    sessions.foreach(s => get(s, "/other/dir"))
+    assert(built.get() == 4, "invalidate of another dir must not evict")
+    getAll()
+    assert(built.get() == 6,
+      "invalidate must evict the dir's entry in every live session")
   }
 }

@@ -8,11 +8,12 @@ import java.nio.file.Files
   * #8): build-if-absent writes the index parquet, a FRESH session
   * scans it instead of rebuilding, and tier on/off cannot change any
   * query's rows. Uses the two index families the verdict named —
-  * the dedup verified-pair table and the NSW graph. Round-11
-  * additions (advisor findings): invalidate is PREFIX-scoped (one
-  * module's invalidate must not delete another module's live
-  * indexes), and the tree is keyed by a corpus FINGERPRINT so a
-  * corpus regenerated at the same path never serves a stale index.
+  * the dedup verified-pair table and the NSW graph. Resets:
+  * `SessionMemo.invalidate` removes the corpus's whole tree, while
+  * the one partial reset (`Dedup.invalidateCanonical`) deletes only
+  * its own prefix, never indexes other live memos still scan. The
+  * tree is keyed by a corpus FINGERPRINT so a corpus regenerated at
+  * the same path never serves a stale index.
   */
 class IndexTierSpec extends SparkSpec {
 
@@ -23,12 +24,10 @@ class IndexTierSpec extends SparkSpec {
 
   test("tier on/off yields identical rows and a fresh session scans, not rebuilds") {
     val d = sf() // sf0.001
-    val queries = Seq("q_dedup_fuzzy", "q_band_shape", "q_ann_beam")
+    val queries = Seq("q_dedup_fuzzy", "q_band_shape", "q_ann_beam",
+      "q_cc_star")
 
-    def resetMemos(): Unit = {
-      graft.llm.Dedup.invalidate(d)
-      graft.llm.Similarity.invalidate(d)
-    }
+    def resetMemos(): Unit = graft.SessionMemo.invalidate(d)
 
     // Baseline: tier off (no root configured).
     assert(graft.IndexTier.rootDir.isEmpty,
@@ -46,7 +45,8 @@ class IndexTierSpec extends SparkSpec {
       // The named index tables exist on disk with complete writes,
       // under the fingerprint-keyed corpus tree.
       val key = graft.IndexTier.corpusKey(d)
-      Seq("dedup_versup", "dedup_verpairs", "nsw_graph").foreach { n =>
+      Seq("dedup_versup", "dedup_verpairs", "nsw_graph",
+        "dedup_cc_star").foreach { n =>
         assert(new java.io.File(s"$root/$key/$n.parquet/_SUCCESS")
           .exists(), s"$n not written")
       }
@@ -65,17 +65,21 @@ class IndexTierSpec extends SparkSpec {
         assert(new java.io.File(s"$root/$key/$n.parquet/_SUCCESS")
           .lastModified() == t, s"$n was rebuilt, not scanned")
       }
-      // invalidate is prefix-scoped: Dedup's invalidate drops ONLY
-      // the dedup_* indexes — the NSW graph (whose in-memory memo in
-      // Similarity still scans it) must survive.
-      graft.llm.Dedup.invalidate(d)
-      assert(!new java.io.File(s"$root/$key/dedup_versup.parquet")
-        .exists(), "invalidate left the disk index behind")
-      assert(new java.io.File(s"$root/$key/nsw_graph.parquet/_SUCCESS")
-        .exists(), "Dedup.invalidate deleted another module's index")
-      graft.llm.Similarity.invalidate(d)
-      assert(!new java.io.File(s"$root/$key/nsw_graph.parquet")
-        .exists(), "Similarity.invalidate left the NSW graph behind")
+      // The partial reset is prefix-scoped: invalidateCanonical drops
+      // ONLY the canonical map — the verified pairs it is built from
+      // and the NSW graph (whose in-memory memos still scan them)
+      // must survive.
+      graft.llm.Dedup.invalidateCanonical(d)
+      assert(!new java.io.File(s"$root/$key/dedup_cc_star.parquet")
+        .exists(), "invalidateCanonical left the canonical map behind")
+      Seq("dedup_versup", "nsw_graph").foreach { n =>
+        assert(new java.io.File(s"$root/$key/$n.parquet/_SUCCESS")
+          .exists(), s"invalidateCanonical deleted $n")
+      }
+      // The full reset removes the corpus's whole tree.
+      graft.SessionMemo.invalidate(d)
+      assert(!new java.io.File(s"$root/$key").exists(),
+        "SessionMemo.invalidate left the corpus index tree behind")
     } finally {
       System.clearProperty("graft.index.dir")
       resetMemos()
@@ -110,9 +114,9 @@ class IndexTierSpec extends SparkSpec {
 
       // Regenerate the corpus in place (content + length change).
       Files.write(marker, "v2-longer".getBytes)
-      // A new JVM has no fingerprint memo; in-process the module
-      // invalidate contract clears it. Use a no-match prefix so the
-      // old tree survives for inspection.
+      // A new JVM has no fingerprint memo; in-process a reset clears
+      // it. Use a no-match prefix so the old tree survives for
+      // inspection.
       graft.IndexTier.invalidate(d, "no-such-prefix")
       val key2 = graft.IndexTier.corpusKey(d)
       assert(key2 != key1, "fingerprint did not change with the corpus")

@@ -542,7 +542,7 @@ class LlmOpsSpec extends SparkSpec {
     // nesting property that derivation rests on (cand(ROWS_PER_BAND)
     // ⊆ cand(1), identical jaccard) against the non-memoized path.
     val dir = sf()
-    Dedup.invalidate(dir)
+    graft.SessionMemo.invalidate(dir)
     val viaMemo = graft.SparkEntry.queries("q_minhash_est")(spark, dir)
       .select("doc_a", "doc_b", "jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap

@@ -83,12 +83,7 @@ class ExchangeGoldenSpec extends SparkSpec {
     // already built. Reset them and plan in sorted name order — the
     // counts are then a deterministic function of the code, not of
     // which OTHER suite ran first.
-    graft.llm.Dedup.invalidate(dir)
-    graft.llm.Embeddings.invalidate(dir)
-    graft.llm.Similarity.invalidate(dir)
-    graft.ops.Graph.invalidate(dir)
-    graft.ops.RelationalQueries.invalidate(dir)
-    graft.ops.Tpch.invalidate(dir)
+    graft.SessionMemo.invalidate(dir)
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(e => exclude.contains(e._1)).map { case (name, fn) =>
       val plan = fn(spark, dir).queryExecution.executedPlan
@@ -159,12 +154,7 @@ class ExchangeGoldenSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", prior)
       spark.conf.set("spark.sql.shuffle.partitions", priorParts)
       System.clearProperty("graft.plan.only")
-      graft.llm.Dedup.invalidate(dir)
-      graft.llm.Embeddings.invalidate(dir)
-      graft.llm.Similarity.invalidate(dir)
-      graft.ops.Graph.invalidate(dir)
-      graft.ops.RelationalQueries.invalidate(dir)
-      graft.ops.Tpch.invalidate(dir)
+      graft.SessionMemo.invalidate(dir)
     }
   }
 

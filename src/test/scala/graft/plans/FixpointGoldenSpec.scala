@@ -40,7 +40,7 @@ class FixpointGoldenSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     System.setProperty("graft.index.dir", "")
     graft.LoopProbe.enable()
-    graft.tools.FixpointGolden.invalidateAll(sf("sf0.01"))
+    graft.SessionMemo.invalidate(sf("sf0.01"))
     try {
       graft.tools.FixpointGolden.Queries.map { name =>
         s"$name\t${graft.tools.FixpointGolden.probeLine(spark, sf("sf0.01"), name)}"
@@ -49,7 +49,7 @@ class FixpointGoldenSpec extends SparkSpec {
       graft.LoopProbe.disable()
       // The probe run leaves memos built tier-off; drop them so later
       // suites rebuild under their own configuration.
-      graft.tools.FixpointGolden.invalidateAll(sf("sf0.01"))
+      graft.SessionMemo.invalidate(sf("sf0.01"))
       spark.conf.set("spark.sql.adaptive.enabled", prior)
       priorTier match {
         case Some(v) => System.setProperty("graft.index.dir", v)
