@@ -61,7 +61,6 @@ object Bench {
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
       catch { case _: Throwable => () }
     }
-    val clearEach = sys.env.get("SPARK_GRAFT_CLEARCACHE").contains("each")
     // Optional comma-separated name filter for fast local iteration
     // (unset for driver runs → full suite), mirroring Verify's.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -97,7 +96,6 @@ object Bench {
               false
             }
           val t = (System.nanoTime() - t0) / 1e9
-          if (clearEach) spark.catalog.clearCache()
           name -> (if (ok) t else -1.0)
       }
       // Drop persisted intermediates at the pass boundary: identical
@@ -216,8 +214,8 @@ object Bench {
     // the MIN for the reduced 2-pass scale schedule, so a profile
     // JSON alone cannot be compared like-for-like across rounds.
     // This sidecar names the statistic each profile carries; the
-    // scale gate (tools/scale_gate.py, ScaleGateSpec) reads it and
-    // flags/widens when candidate and reference statistics differ.
+    // scale gate (ScaleGateSpec) reads it and flags/widens when
+    // candidate and reference statistics differ.
     // Checked-in bench/scale_r* sets copy it as sfX_meta.json.
     // Labels name the statistic ACTUALLY computed (ADVICE r12): the
     // lower-middle of n sorted values is the true median for odd n,

@@ -5,62 +5,59 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The per-query scaling-ratio gate as a standing test (round-9
-  * verdict #2): `tools/scale_gate.py` only fired when someone
-  * remembered to run it, so a plan change that reintroduces a
-  * super-linear query could pass `sbt test`. This spec is a Scala
-  * port of the same rules, run on every test invocation against the
-  * two NEWEST checked-in `bench/scale_r*` profile sets — checking in
-  * a new round's profiles automatically subjects them to the gate.
+/** The per-query scale gate: the one implementation of the rules that
+  * judge the checked-in `bench/scale_r*` profile sets. It runs on every
+  * `sbt test` with the NEWEST set as the candidate, so checking in a new
+  * round's profiles subjects them to the gate.
   *
-  * Gate rules (identical to the Python tool): for each query the
-  * warm sf0.1→sf1 ratio (sub-100 ms sf0.1 times floored to 100 ms)
-  * fails when it exceeds BOTH `reference_ratio × 1.5` and the 3×
-  * absolute floor, or the 15× hard cap regardless of reference
-  * (15× on 10× data = super-linear). Round-12 tightening (ADVICE
-  * r11): the hard-cap escape requires the LOW-scale time to have
-  * improved vs the reference round — the denominator effect is the
-  * only legitimate way a ratio blows the cap with nothing regressed.
-  * Round-13 (ADVICE r12 medium): attribution rows waive ONLY the
-  * reference-relative rules, never the hard cap — their
-  * isolated-seconds value is self-reported by the candidate (a judge
-  * re-runs the cited ExplainQ command to verify), so it must not
-  * bypass the one rule that catches a query super-linear in both
-  * rounds. Round-13 (verdict r12 #2) adds the ratio-independent
-  * ABSOLUTE cross-round rule: a query whose high-scale warm exceeds
-  * the reference round's by >2× AND >2 s fails the decade even with
-  * a flat ratio — the uniform-regression shape (r12's q_zorder: sf1
-  * 2.78→6.17 s AND sf10 9.4→30.8 s, ratio within tolerance) that the
-  * ratio family is structurally blind to. Waivable by attribution.
-  * Statistic awareness (verdict r11 #2): profile sets may carry
-  * `sfX_meta.json` sidecars naming the warm statistic; when
-  * candidate and reference differ (min-of-2 vs median-of-3), the
-  * relative tolerance widens ×1.3 for that decade (and the absolute
-  * rule's 2× likewise) so a min reference is not compared raw
-  * against a median candidate.
+  * A set holds the maps graft.Bench writes (`target/bench_{cold,warm,
+  * meta}.json`), copied as `sfX_{cold,warm,meta}.json` for sfX in sf01,
+  * sf1, sf10 and sf100. A decade (sf0.1→sf1, sf1→sf10, sf10→sf100) is
+  * gated when the candidate carries its high-scale profile. Its
+  * reference is the newest older set that carries it too; with none,
+  * every query is held to the hard cap alone. A candidate may not skip a
+  * decade that an older set carries by leaving out its profiles.
+  *
+  * Per query, on the warm ratio hi/lo (lo floored to 100 ms):
+  *  - hard cap: a ratio over 15× fails, unless the high-scale time did
+  *    not regress (cand ≤ ref × relTol) AND the low-scale time improved.
+  *    That denominator effect is the only way a ratio legitimately blows
+  *    the cap; a query super-linear in both rounds must not be
+  *    grandfathered by flat absolute times.
+  *  - reference-relative: a ratio over max(refRatio × relTol, 3×) fails
+  *    when the high-scale time also regressed past ref × relTol, by more
+  *    than max(1 s, refHi). Sub-second deltas on tiny denominators are
+  *    suite pressure, not scaling laws.
+  *  - absolute: a high-scale warm over refHi × 2 and refHi + 2 s fails
+  *    whatever the ratio: a uniform regression keeps the ratio flat.
+  *
+  * relTol is 1.5. When the meta sidecars of candidate and reference name
+  * different warm statistics (say min2 vs median3) on either profile, it
+  * widens ×1.3 for that decade, and the absolute 2× with it. A row of the
+  * candidate's `attributions.tsv`
+  * (`query<TAB>hiProfile<TAB>isolatedSeconds<TAB>evidence`) waives the
+  * reference-relative and absolute rules when the isolated value itself
+  * is within refHi × relTol. It never waives the hard cap: the value is
+  * self-reported, and a judge re-runs the cited command before trusting
+  * it. Waivers, statistic mismatches and the pass-pressure lint (suite
+  * warm > 1.3× cold with cold > 0.5 s: the number reflects its
+  * neighbours, not the query) are reported as info lines and never fail.
+  *
+  * After a scale bench, copy `target/bench_{cold,warm,meta}.json` to
+  * `bench/scale_rN/sfX_{cold,warm,meta}.json` and run
+  * `sbt "testOnly graft.plans.ScaleGateSpec"`.
   */
 class ScaleGateSpec extends AnyFunSuite {
 
   private val RelTol = 1.5
   private val AbsFloor = 3.0
-  // The reference-relative RATIO rule also needs an ABSOLUTE
-  // high-scale regression of max(1.0 s, refHi) — round 13 scaled the
-  // flat floor with the query (ADVICE r12): for a multi-second query
-  // a sub-refHi delta is host noise rel_tol already tolerates, while
-  // the 1.0 s base keeps the recorded sub-second false positives dead
-  // (q_code_detect r11 0.15→0.47 s, q_zipf r12 0.33→0.95 s were
-  // in-suite pressure on tiny denominators — a ratio over a tiny
-  // denominator amplifies wobble no scaling law can be read from,
-  // while every REAL regression caught so far cost whole seconds of
-  // high-scale time). The hard cap ignores this floor.
   private val AbsDeltaFloor = 1.0
-  // Ratio-independent absolute cross-round rule (round 13, verdict
-  // r12 #2): high-scale warm > refHi × AbsRel AND +AbsRegressFloor
-  // seconds fails — the uniform-regression shape ratios can't see.
   private val AbsRel = 2.0
   private val AbsRegressFloor = 2.0
   private val HardCap = 15.0
   private val StatMismatchWiden = 1.3
+  private val PressureWarmOverCold = 1.3
+  private val PressureMinCold = 0.5
 
   /** Parse the flat `{"name":1.23,...}` maps graft.Bench writes. */
   private[plans] def parseProfile(text: String): Map[String, Double] =
@@ -69,16 +66,18 @@ class ScaleGateSpec extends AnyFunSuite {
       .map(m => m.group(1) -> m.group(2).toDouble)
       .toMap
 
-  private def loadProfile(dir: Path, name: String): Map[String, Double] =
-    parseProfile(new String(
-      Files.readAllBytes(dir.resolve(name + ".json")), "UTF-8"))
+  /** Profile `name` of a set; empty when the set does not carry it. */
+  private def loadProfile(dir: Path, name: String): Map[String, Double] = {
+    val p = dir.resolve(name + ".json")
+    if (!Files.exists(p)) Map.empty
+    else parseProfile(new String(Files.readAllBytes(p), "UTF-8"))
+  }
 
-  /** The warm statistic named in `sfX_meta.json` next to profile
-    * `sfX_warm`, when the sidecar is checked in (older rounds lack
-    * it — treated as unknown, no widening).
+  /** The warm statistic named in the `sfX_meta.json` sidecar, when the
+    * set has one (older rounds lack it: unknown, no widening).
     */
-  private def warmStat(dir: Path, warmName: String): Option[String] = {
-    val p = dir.resolve(warmName.replace("_warm", "_meta") + ".json")
+  private def warmStat(dir: Path, sf: String): Option[String] = {
+    val p = dir.resolve(sf + "_meta.json")
     if (!Files.exists(p)) None
     else "\"warm_stat\"\\s*:\\s*\"([^\"]+)\"".r
       .findFirstMatchIn(new String(Files.readAllBytes(p), "UTF-8"))
@@ -95,14 +94,8 @@ class ScaleGateSpec extends AnyFunSuite {
       }
     }
 
-  /** Optional `attributions.tsv` in the candidate profile dir:
-    * `query<TAB>hiProfile<TAB>isolatedSeconds<TAB>evidence`. A
-    * failing query is waived iff its row targets the decade's HIGH
-    * profile and the ISOLATED re-measurement itself passes the hi_ok
-    * test — machine-checkable evidence that the suite value was
-    * co-running pressure (round-11 verdict #1's "gate taught to
-    * carry an attribution"). Never silent: the waiver is surfaced
-    * via info() in the tests.
+  /** The candidate's optional `attributions.tsv`, keyed by (query,
+    * hiProfile).
     */
   private[plans] def loadAttributions(dir: Path)
       : Map[(String, String), (Double, String)] = {
@@ -120,17 +113,10 @@ class ScaleGateSpec extends AnyFunSuite {
       }.toMap
   }
 
-  /** Port of scale_gate.py's failure rules; returns failure lines.
-    * `candHi`/`refHi` are the raw HIGH-scale warm times: a query
-    * whose high-scale time did not regress (cand ≤ ref × relTol)
-    * passes the reference-relative rule regardless of ratio — a
-    * ratio gate punishes the denominator improving (round 11:
-    * q_band_shape's sf0.1 warm got 2.2× faster and "failed" with an
-    * sf1 time that had IMPROVED); a real scaling-law regression must
-    * show in the high-scale time. The HARD cap's escape additionally
-    * requires `candLo < refLo` (the low-scale time improved): without
-    * it, a query super-linear in BOTH rounds would be grandfathered
-    * by flat absolute times.
+  /** The gate rules (see the class doc); returns failure lines and
+    * reports each applied waiver once through `waived`. `cand`/`ref` are
+    * the warm ratios, `candHi`/`refHi` and `candLo`/`refLo` the raw warm
+    * times at the decade's high and low scale.
     */
   private[plans] def gate(cand: Map[String, Double],
       ref: Map[String, Double],
@@ -173,23 +159,24 @@ class ScaleGateSpec extends AnyFunSuite {
     // same factor to the absolute rule's 2x.
     val absRel = AbsRel * (relTol / RelTol)
     cand.toSeq.sortBy(_._1).flatMap { case (q, cr) =>
+      // Both waivable rules may consult the attribution: look it up
+      // (and report it) at most once per query.
+      lazy val waivedHere = attributed(q)
       val ratioFail =
-        // Attribution never waives the hard cap (ADVICE r12 medium):
-        // isolated_seconds is self-reported and unverifiable here.
         if (cr > HardCap && !(hiOk(q) && loImproved(q)))
           Some(f"$q: warm ratio $cr%.1fx exceeds the hard cap ${HardCap}x")
         else if (cr <= HardCap) ref.get(q) match {
           case Some(rr) if cr > math.max(rr * relTol, AbsFloor) &&
               !hiOk(q) &&
               delta(q) > math.max(AbsDeltaFloor,
-                refHi.getOrElse(q, 0.0)) && !attributed(q) =>
+                refHi.getOrElse(q, 0.0)) && !waivedHere =>
             Some(f"$q: warm ratio $cr%.1fx vs reference $rr%.1fx " +
               f"(hi +${delta(q)}%.2fs)")
           case _ => None
         } else None
       val absFail = (candHi.get(q), refHi.get(q)) match {
         case (Some(c), Some(r)) if c >= 0 && r >= 0 && c > r * absRel &&
-            c - r > AbsRegressFloor && !attributed(q) =>
+            c - r > AbsRegressFloor && !waivedHere =>
           Some(f"$q: high-scale warm $c%.2fs exceeds reference $r%.2fs " +
             f"x $absRel%.1f (+${c - r}%.2fs, ratio-independent " +
             "absolute rule)")
@@ -199,6 +186,7 @@ class ScaleGateSpec extends AnyFunSuite {
     }
   }
 
+  /** Checked-in profile sets, oldest first. */
   private def profileDirs: Seq[Path] = {
     val bench = Paths.get("bench")
     if (!Files.isDirectory(bench)) return Seq.empty
@@ -208,185 +196,209 @@ class ScaleGateSpec extends AnyFunSuite {
           .forall(n => Files.exists(p.resolve(n + ".json"))))
       .toSeq
       // Numeric round order, letter suffix after the bare number
-      // (r8 < r8b < r9); the newest is the candidate.
+      // (r8 < r8b < r9).
       .sortBy { p =>
         val n = p.getFileName.toString.stripPrefix("scale_r")
         (n.takeWhile(_.isDigit).toInt, n.dropWhile(_.isDigit))
       }
   }
 
-  private case class RatioPair(cand: Map[String, Double],
+  private case class Decade(label: String, lo: String, hi: String)
+
+  private val Decades = Seq(
+    Decade("sf0.1->sf1", "sf01", "sf1"),
+    Decade("sf1->sf10", "sf1", "sf10"),
+    Decade("sf10->sf100", "sf10", "sf100"))
+
+  /** One decade's gate inputs; `notes` are the statistic-mismatch and
+    * pass-pressure lint lines.
+    */
+  private case class RatioPair(label: String, cand: Map[String, Double],
       ref: Map[String, Double], candHi: Map[String, Double],
       refHi: Map[String, Double], candLo: Map[String, Double],
-      refLo: Map[String, Double], relTol: Double, label: String,
-      attributions: Map[String, (Double, String)] = Map.empty)
+      refLo: Map[String, Double], relTol: Double,
+      attributions: Map[String, (Double, String)], notes: Seq[String]) {
+    def failures(waived: String => Unit = _ => ()): Seq[String] =
+      gate(cand, ref, candHi, refHi, candLo, refLo, relTol, attributions,
+        waived)
+  }
 
-  /** The decade's effective relative tolerance: widened ×1.3 when the
-    * two sets' warm statistics differ on either profile (meta
-    * sidecars present on both sides and unequal).
+  /** The decade helper: gate inputs for decade `d` with `sets.last` as
+    * the candidate. Right(None) when no set carries the decade; Left when
+    * the candidate lacks it but an older set carries it.
     */
-  private def decadeRelTol(cand: Path, ref: Path,
-      lo: String, hi: String): Double = {
-    val mismatch = Seq(lo, hi).exists { n =>
-      (warmStat(cand, n), warmStat(ref, n)) match {
-        case (Some(c), Some(r)) => c != r
-        case _ => false
+  private def decadePair(sets: Seq[Path],
+      d: Decade): Either[String, Option[RatioPair]] = {
+    def carries(p: Path) = Files.exists(p.resolve(d.hi + "_warm.json"))
+    val cand = sets.last
+    val ref = sets.init.filter(carries).lastOption
+    if (!carries(cand))
+      ref.fold[Either[String, Option[RatioPair]]](Right(None)) { r =>
+        Left(s"newest profile set ${cand.getFileName} lacks " +
+          s"${d.hi}_warm.json but ${r.getFileName} carries one — the " +
+          s"${d.label} gate cannot be skipped by omitting its profiles; " +
+          "re-run the bench and check the profiles in")
       }
-    }
-    if (mismatch) RelTol * StatMismatchWiden else RelTol
-  }
-
-  private def ratioPair(cand: Path, ref: Path,
-      lo: String, hi: String, label: String): RatioPair =
-    RatioPair(
-      warmRatios(loadProfile(cand, lo), loadProfile(cand, hi)),
-      warmRatios(loadProfile(ref, lo), loadProfile(ref, hi)),
-      loadProfile(cand, hi),
-      loadProfile(ref, hi),
-      loadProfile(cand, lo),
-      loadProfile(ref, lo),
-      decadeRelTol(cand, ref, lo, hi),
-      label,
-      loadAttributions(cand).collect {
-        case ((q, p), v) if p == hi => q -> v
-      })
-
-  private def latestRatioPair: Option[RatioPair] = {
-    val dirs = profileDirs
-    if (dirs.size < 2) None
     else {
-      val Seq(ref, cand) = dirs.takeRight(2)
-      Some(ratioPair(cand, ref, "sf01_warm", "sf1_warm",
-        s"${cand.getFileName} vs ${ref.getFileName}"))
+      def refProfile(name: String) =
+        ref.fold(Map.empty[String, Double])(loadProfile(_, name))
+      val (candLo, candHi) =
+        (loadProfile(cand, d.lo + "_warm"), loadProfile(cand, d.hi + "_warm"))
+      val (refLo, refHi) =
+        (refProfile(d.lo + "_warm"), refProfile(d.hi + "_warm"))
+      val mismatches = for {
+        r <- ref.toSeq
+        sf <- Seq(d.lo, d.hi)
+        c <- warmStat(cand, sf)
+        rs <- warmStat(r, sf)
+        if c != rs
+      } yield s"statistic mismatch on ${sf}_warm: candidate $c vs " +
+        s"reference $rs -> rel_tol widened to " +
+        f"${RelTol * StatMismatchWiden}%.2fx"
+      val cold = loadProfile(cand, d.hi + "_cold")
+      val lint = candHi.toSeq.sorted.flatMap { case (q, w) =>
+        cold.get(q).collect {
+          case c if w >= 0 && c > PressureMinCold &&
+              w > c * PressureWarmOverCold =>
+            f"lint $q: ${d.hi} warm $w%.2fs > cold $c%.2fs " +
+              f"x$PressureWarmOverCold%.1f -- " +
+              "pass-pressure signature, attribute or re-measure"
+        }
+      }
+      val label = s"${cand.getFileName} vs " +
+        s"${ref.fold("no reference")(_.getFileName.toString)}, ${d.label}"
+      Right(Some(RatioPair(label,
+        warmRatios(candLo, candHi), warmRatios(refLo, refHi),
+        candHi, refHi, candLo, refLo,
+        if (mismatches.nonEmpty) RelTol * StatMismatchWiden else RelTol,
+        loadAttributions(cand).collect {
+          case ((q, p), v) if p == d.hi + "_warm" => q -> v
+        },
+        mismatches ++ lint)))
     }
   }
 
-  /** The SECOND decade (sf1→sf10) pair over the newest two profile
-    * sets that carry sf10 profiles (round-10 verdict #2: the decade
-    * where the real scale bugs lived had no machine-checked
-    * reference). Same rules as decade 1. Returns Left(error) when
-    * the NEWEST overall set LACKS sf10 even though an older set has
-    * it — a round must not escape the second-decade gate by simply
-    * omitting its sf10 profiles (ADVICE r11 #2).
-    */
-  private def latestRatioPairFor(lo: String, hi: String,
-      label: String): Either[String, Option[RatioPair]] = {
-    val all = profileDirs
-    val withHi = all.filter(p => Files.exists(p.resolve(hi + ".json")))
-    if (withHi.isEmpty) Right(None)
-    else if (all.nonEmpty && all.last != withHi.last)
-      Left(s"newest profile set ${all.last.getFileName} lacks " +
-        s"$hi.json but ${withHi.last.getFileName} carries one — " +
-        s"the $label gate cannot be skipped by omitting its " +
-        "profiles; re-run the bench and check the profiles in")
-    else if (withHi.size < 2) Right(None)
-    else {
-      val Seq(ref, cand) = withHi.takeRight(2)
-      Right(Some(ratioPair(cand, ref, lo, hi,
-        s"${cand.getFileName} vs ${ref.getFileName} ($label)")))
-    }
-  }
-
-  private def latestRatioPairSf10: Either[String, Option[RatioPair]] =
-    latestRatioPairFor("sf1_warm", "sf10_warm", "sf1->sf10")
-
-  /** Third decade (round 13): activates once TWO checked-in sets
-    * carry sf100 profiles (the r13 set seeds the reference). The
-    * sf100 profile covers the measured TAIL (a full 252-query sf100
-    * suite is hours), so ratios gate the intersection only — but the
-    * same cannot-skip rule applies: once a round ships sf100
-    * profiles, later rounds may not silently drop them.
-    */
-  private def latestRatioPairSf100: Either[String, Option[RatioPair]] =
-    latestRatioPairFor("sf10_warm", "sf100_warm", "sf10->sf100")
-
-  test("newest checked-in scale profiles pass the gate vs the previous set") {
-    latestRatioPair match {
-      case None =>
-        fail("fewer than two bench/scale_r* profile sets checked in — " +
-          "the scale gate has nothing to compare (each round must " +
-          "check in its profiles)")
-      case Some(rp) =>
-        val failures = gate(rp.cand, rp.ref, rp.candHi, rp.refHi,
-          rp.candLo, rp.refLo, rp.relTol, rp.attributions, info(_))
+  /** Gate decade `d` of the newest set, reporting notes and waivers. */
+  private def gateNewest(d: Decade, shrinkCheck: Boolean): Unit = {
+    val sets = profileDirs
+    assert(sets.size >= 2, "fewer than two bench/scale_r* profile sets " +
+      "checked in — the scale gate has nothing to compare (each round " +
+      "must check in its profiles)")
+    decadePair(sets, d) match {
+      case Left(err) => fail(err)
+      case Right(None) =>
+        cancel(s"no profile set carries ${d.hi} profiles yet — the " +
+          s"${d.label} gate activates once a round checks them in")
+      case Right(Some(rp)) =>
+        rp.notes.foreach(info(_))
+        val failures = rp.failures(info(_))
         assert(failures.isEmpty,
           s"scale gate FAIL (${rp.label}):\n" + failures.mkString("\n"))
         info(s"scale gate OK (${rp.label}): ${rp.cand.size} queries within " +
           s"tolerance (rel ${rp.relTol}x, floor ${AbsFloor}x, cap ${HardCap}x)")
         // The comparison must not silently dwindle: both sets cover
         // (nearly) the full suite.
-        assert(rp.cand.size >= rp.ref.size - 5,
-          s"candidate ratio set shrank: ${rp.cand.size} vs ${rp.ref.size}")
+        if (shrinkCheck)
+          assert(rp.cand.size >= rp.ref.size - 5,
+            s"candidate ratio set shrank: ${rp.cand.size} vs ${rp.ref.size}")
     }
+  }
+
+  test("newest checked-in scale profiles pass the gate vs the previous set") {
+    gateNewest(Decades(0), shrinkCheck = true)
   }
 
   test("second decade (sf1->sf10): newest sf10 profiles pass the gate") {
-    latestRatioPairSf10 match {
-      case Left(err) => fail(err)
-      case Right(None) =>
-        cancel("no profile set with sf10 profiles yet — the " +
-          "second-decade gate activates once a round checks in an " +
-          "sf10 bench")
-      case Right(Some(rp)) =>
-        val failures = gate(rp.cand, rp.ref, rp.candHi, rp.refHi,
-          rp.candLo, rp.refLo, rp.relTol, rp.attributions, info(_))
-        assert(failures.isEmpty,
-          s"scale gate FAIL (${rp.label}):\n" + failures.mkString("\n"))
-        info(s"scale gate OK (${rp.label}): ${rp.cand.size} queries within " +
-          s"tolerance (rel ${rp.relTol}x, floor ${AbsFloor}x, cap ${HardCap}x)")
-        assert(rp.cand.size >= rp.ref.size - 5,
-          s"candidate ratio set shrank: ${rp.cand.size} vs ${rp.ref.size}")
-    }
+    gateNewest(Decades(1), shrinkCheck = true)
   }
 
   test("third decade (sf10->sf100): newest sf100 profiles pass the gate") {
-    latestRatioPairSf100 match {
-      case Left(err) => fail(err)
-      case Right(None) =>
-        cancel("fewer than two profile sets with sf100 profiles — the " +
-          "third-decade gate activates once two rounds have checked " +
-          "in an sf100 tail bench")
-      case Right(Some(rp)) =>
-        val failures = gate(rp.cand, rp.ref, rp.candHi, rp.refHi,
-          rp.candLo, rp.refLo, rp.relTol, rp.attributions, info(_))
-        assert(failures.isEmpty,
-          s"scale gate FAIL (${rp.label}):\n" + failures.mkString("\n"))
-        info(s"scale gate OK (${rp.label}): ${rp.cand.size} tail queries " +
-          s"within tolerance (rel ${rp.relTol}x, cap ${HardCap}x)")
+    // The sf100 profile covers the measured tail only, so its ratio set
+    // is not held to the suite size.
+    gateNewest(Decades(2), shrinkCheck = false)
+  }
+
+  test("gate verdicts on every checked-in pair") {
+    // Each round r8b..r14 in turn as the newest set, over the sets
+    // checked in up to it: which decades are gated, which queries fail,
+    // which waivers apply (once each) and how many lint lines print.
+    val sets = profileDirs
+    val rounds = Seq("r8b", "r9", "r10", "r11", "r12", "r13", "r14")
+    val verdicts = (for {
+      round <- rounds
+      n = sets.indexWhere(_.getFileName.toString == "scale_" + round) + 1
+      _ = assert(n > 1, s"scale_$round missing")
+      d <- Decades
+      rp <- decadePair(sets.take(n), d).fold(e => fail(e), identity)
+    } yield {
+      val waivers = Seq.newBuilder[String]
+      val failures = rp.failures(waivers += _)
+      (round, d.label) -> (rp, failures, waivers.result())
+    }).toMap
+    def queries(lines: Seq[String]) = lines.map(_.takeWhile(_ != ':'))
+
+    val d1 = Decades(0).label
+    val d2 = Decades(1).label
+    val d3 = Decades(2).label
+    assert(verdicts.keySet == rounds.map(_ -> d1).toSet ++
+      Seq("r10", "r11", "r12", "r13", "r14").map(_ -> d2) + ("r14" -> d3))
+
+    val r10Cap = Seq("q_band_shape", "q_containment", "q_ivf_ann",
+      "q_ivf_pq", "q_langid_confusion", "q_levenshtein", "q_map_fns",
+      "q_ngram_jaccard", "q_not_in", "q_oov_rate")
+    val expectedFailures = Map(
+      ("r10", d2) -> r10Cap,
+      ("r14", d2) -> Seq("q_bigram_lm", "q_content_chunks", "q_pq_search"))
+    val expectedWaivers = Map(
+      ("r12", d2) -> Seq("q_active_users", "q_zorder"),
+      ("r14", d2) -> Seq("q_bigram_lm", "q_content_chunks"))
+    verdicts.foreach { case (k, (_, failures, waivers)) =>
+      assert(queries(failures) == expectedFailures.getOrElse(k, Nil),
+        s"$k failures: $failures")
+      assert(queries(waivers) == expectedWaivers.getOrElse(k, Nil),
+        s"$k waivers: $waivers")
     }
+
+    // r9 has no sf10 profiles, so r10's second decade is held to the
+    // hard cap alone; so is r14's sf100 tail (r13 has no sf100 set).
+    val (r10, r10Failures, _) = verdicts(("r10", d2))
+    assert(r10.ref.isEmpty && r10Failures.forall(_.contains("hard cap")))
+    assert(verdicts(("r14", d2))._2.forall(_.contains("hard cap")))
+    val (r14Tail, _, _) = verdicts(("r14", d3))
+    assert(r14Tail.ref.isEmpty && r14Tail.cand.size == 8)
+    // r12 mixed median-of-3 with r11's min-of-2.
+    assert(verdicts(("r12", d2))._1.relTol == RelTol * StatMismatchWiden)
+    assert(rounds.map(r => Decades.flatMap(d => verdicts.get((r, d.label)))
+      .map(_._1.notes.count(_.startsWith("lint "))).sum) ==
+      Seq(2, 3, 108, 11, 9, 6, 6))
   }
 
   test("a synthetic super-linear regression fails the gate") {
     // Take the real newest profiles and inflate one query's sf1 warm
     // time 100x — the gate must name it. This pins that the gate CAN
     // fail (a gate that never fires is not a gate).
-    latestRatioPair match {
-      case None => fail("no profiles — see the other test")
-      case Some(RatioPair(cand, ref, candHi, refHi, candLo, refLo, relTol, _,
-          attributions)) =>
-        val victim = cand.keys.min
-        // Inflate BOTH the ratio and the high-scale time — a real
-        // regression moves both, and the hi-scale escape must not
-        // mask the injection.
-        val broken = cand.updated(victim, cand(victim) * 100.0)
-        val brokenHi = candHi.updated(victim,
-          candHi.getOrElse(victim, 1.0) * 100.0)
-        val failures = gate(broken, ref, brokenHi, refHi, candLo, refLo,
-          relTol, attributions)
-        assert(failures.exists(_.startsWith(victim + ":")),
-          s"inflating $victim 100x did not trip the gate: $failures")
-        // And the uninflated map still passes — the synthetic failure
-        // is attributable to the injection alone.
-        assert(gate(cand, ref, candHi, refHi, candLo, refLo, relTol,
-          attributions).isEmpty)
-    }
+    val rp = decadePair(profileDirs, Decades(0)).toOption.flatten
+      .getOrElse(fail("no profiles — see the first decade test"))
+    val victim = rp.cand.keys.min
+    // Inflate BOTH the ratio and the high-scale time — a real
+    // regression moves both, and the hi-scale escape must not mask the
+    // injection.
+    val broken = rp.copy(
+      cand = rp.cand.updated(victim, rp.cand(victim) * 100.0),
+      candHi = rp.candHi.updated(victim,
+        rp.candHi.getOrElse(victim, 1.0) * 100.0))
+    assert(broken.failures().exists(_.startsWith(victim + ":")),
+      s"inflating $victim 100x did not trip the gate: ${broken.failures()}")
+    // And the uninflated map still passes — the synthetic failure is
+    // attributable to the injection alone.
+    assert(rp.failures().isEmpty)
   }
 
   test("hard-cap escape requires the low-scale time to have improved") {
     // A query super-linear in BOTH rounds (ratio > cap) with flat
     // absolute times must FAIL: only the denominator effect (low
     // scale improved, high scale not regressed) legitimizes a
-    // capped-out ratio. This pins the ADVICE-r11 tightening.
+    // capped-out ratio.
     val cand = Map("q_x" -> 20.0)
     val ref = Map("q_x" -> 20.0)
     val hi = Map("q_x" -> 10.0)
@@ -445,7 +457,7 @@ class ScaleGateSpec extends AnyFunSuite {
     // A query super-linear in both rounds (ratio > 15x, flat low
     // scale) must fail even with an attribution row: the isolated
     // value is self-reported and the hard cap is the rule that
-    // catches genuine super-linearity (ADVICE r12 medium).
+    // catches genuine super-linearity.
     val cand = Map("q_s" -> 20.0)
     val ref = Map("q_s" -> 20.0)
     val hi = Map("q_s" -> 10.0)
@@ -467,7 +479,8 @@ class ScaleGateSpec extends AnyFunSuite {
     assert(gate(cand, ref, candHi, refHi,
       attributions = Map("q_a" -> (2.53, "isolated evidence")),
       waived = m => msgs ::= m).isEmpty)
-    assert(msgs.exists(_.contains("isolated")))
+    // Reported once, though both waivable rules consult it.
+    assert(msgs.size == 1 && msgs.head.contains("isolated"), msgs)
     // Isolated value that ITSELF regressed: attribution rejected.
     assert(gate(cand, ref, candHi, refHi,
       attributions = Map("q_a" -> (7.9, "bogus"))).nonEmpty)
